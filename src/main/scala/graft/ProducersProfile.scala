@@ -80,16 +80,16 @@ object ProducersProfile {
     if (!extended) core
     else core ++ Seq(
       Lane("client_build_only", 65536, _ => i => {
-        ArgsSerializers.active.roundTripConsistent(Seq(i))
-        Job("bench_noop", Seq(i), "bench", RetryOpts()); ()
+        val argsJson = ArgsSerializers.active.consistentEncoding(Seq(i)).get
+        Job.encoded("bench_noop", argsJson, "bench", RetryOpts(), System.currentTimeMillis()); ()
       }),
       Lane("backend_enqueue_rows", 8192, n => {
         val be = new graft.backend.ParquetBackend(spark, s"$root/be$n")
         (1 to 2048).foreach(i => be.enqueueRows(Seq(tmpl.copy(id = s"w$i"))))
         i => be.enqueueRows(Seq(tmpl.copy(id = i.toString)))
       }),
-      Lane("spark_conf_getoption", 65536, _ => _ => {
-        spark.conf.getOption("graft.wal.fsync"); ()
+      Lane("spark_conf_get", 65536, _ => _ => {
+        spark.conf.get("graft.wal.fsync", "false"); ()
       }))
   }
 

@@ -150,7 +150,7 @@ object QuickProbe {
             graft.backend.WalStore.append(root, "probe_raw", hoistedEnc,
               Seq(tmpl.copy(id = i.toString)), force = false))
           time("conf_lookup")(_ =>
-            spark.conf.getOption("graft.wal.fsync"))
+            spark.conf.get("graft.wal.fsync", "false"))
           time("implicit_encoder_resolution") { _ =>
             import spark.implicits._
             implicitly[org.apache.spark.sql.Encoder[Job]]; ()

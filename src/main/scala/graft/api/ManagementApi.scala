@@ -324,18 +324,36 @@ final class ManagementApi(backend: QueueBackend, spark: SparkSession) {
       () => writeCounted("dead", backend.deadJobs),
       () => writeCounted("cron", backend.cronEntries),
       () => writeCounted("batches", backend.batches))
+    onSnapshotPool(work).toMap
+  }
+
+  /** Run independent snapshot steps on a bounded pool and return their
+    * results in order. If one fails, the others' Spark jobs are
+    * cancelled and their threads interrupted and awaited before its
+    * failure is rethrown, so no pool thread outlives the call. */
+  private def onSnapshotPool[A](work: Seq[() => A]): Seq[A] = {
+    val sc = spark.sparkContext
+    val tag = s"graft-snapshot-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
     try {
-      import scala.jdk.CollectionConverters._
       val futures = work.map(w =>
-        pool.submit(new java.util.concurrent.Callable[(String, Long)] {
-          def call(): (String, Long) = w()
-        })).asJava
-      work.indices.map(i => futures.get(i).get()).toMap
+        pool.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = { sc.addJobTag(tag); w() }
+        }))
+      val out = futures.map(_.get())
+      pool.shutdown()
+      out
     } catch {
-      // unwrap so callers keep seeing the write's own failure type
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    } finally pool.shutdown()
+      case e: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        pool.shutdownNow()
+        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+        e match {
+          // unwrap so callers keep seeing the step's own failure type
+          case ee: java.util.concurrent.ExecutionException => throw ee.getCause
+          case other => throw other
+        }
+    }
   }
 
   /** Restore a snapshot into `into`. Re-importing the SAME snapshot is a
@@ -368,14 +386,7 @@ final class ManagementApi(backend: QueueBackend, spark: SparkSession) {
         spark.read.parquet(s"$dir/batches").as[BatchMeta]
           .collect().filterNot(b => existingBatches(b.id)).foreach(into.putBatch)
       })
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-    try {
-      val futures = work.map(w =>
-        pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = w() }))
-      futures.foreach(_.get())
-    } catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    } finally pool.shutdown()
+    onSnapshotPool(work)
     // provably-empty collections report 0 from table metadata (r15) —
     // a restore into a fresh backend otherwise pays an empty visibility
     // read per untouched collection

@@ -282,8 +282,11 @@ class ParquetBackend(spark0: SparkSession, val root: String)
       // N+1 contract rides single-file visibility, and bulk appends are
       // already amortized. `graft.ready.percall=file` restores the
       // file-token behavior per session.
+      // Knobs are read with a default, never `getOption`: Spark's
+      // getOption builds and catches an exception (error-class message
+      // plus stack trace) for every unset key, twice per call here.
       val walReady = tbl == "ready" && rows.size == 1 &&
-        !spark.conf.getOption("graft.ready.percall").contains("file")
+        spark.conf.get("graft.ready.percall", "wal") != "file"
       if (StreamedTables(tbl) && !walReady) {
         // FIFO vs the WAL lane (ADVICE r9): an earlier per-call enqueue
         // may still be WAL-resident (stream-visible only at the next
@@ -316,15 +319,17 @@ class ParquetBackend(spark0: SparkSession, val root: String)
         // races only other appends, so the cap is a soft bound
         // overshootable by the number of in-flight producers, and the
         // next append drains.
-        val frames = WalStore.frame(enc, rows)
-        val fsync = spark.conf.getOption("graft.wal.fsync").contains("true")
-        if (WalStore.recordCount(root, tbl, enc) + rows.size > WalStore.MaxRecords)
+        val frames = java.nio.ByteBuffer.wrap(WalStore.frame(enc, rows))
+        val fsync = spark.conf.get("graft.wal.fsync", "false") == "true"
+        // one writer lookup per append: a fold truncates this same
+        // writer, so its size stays the live record count
+        val wal = WalStore.forTable(root, tbl, enc)
+        if (wal.size + rows.size > WalStore.MaxRecords)
           withFoldExclusive(tbl) {
-            if (WalStore.recordCount(root, tbl, enc) + rows.size > WalStore.MaxRecords)
-              drainWal(tbl, enc)
+            if (wal.size + rows.size > WalStore.MaxRecords) drainWal(tbl, enc)
           }
         withFoldShared(tbl) {
-          WalStore.appendFrames(root, tbl, enc, frames, rows.size, force = fsync)
+          wal.appendFramed(frames, rows.size, force = fsync)
         }
       }
     }

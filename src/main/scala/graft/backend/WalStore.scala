@@ -158,11 +158,17 @@ object WalStore {
       * channel the r15 driver verify caught as a ClosedChannelException
       * flake. The status is re-asserted on exit so the signal (e.g.
       * GraftWorker.stop interrupting its maintenance loop) is never
-      * swallowed, only deferred past the channel op. */
-    private def uninterruptibly[A](body: => A): A = {
-      val was = Thread.interrupted()
-      try body
-      finally if (was || Thread.interrupted()) Thread.currentThread().interrupt()
+      * swallowed, only deferred past the channel op. An interrupt that
+      * lands MID-op closes the channel; the heal-retry clears it through
+      * [[ParkedInterrupt.clear]], which records it for the re-assert. */
+    private def uninterruptibly[A](body: ParkedInterrupt => A): A = {
+      val parked = new ParkedInterrupt
+      parked.clear()
+      try body(parked)
+      finally {
+        parked.clear()
+        if (parked.seen) Thread.currentThread().interrupt()
+      }
     }
 
     def size: Int = count
@@ -308,7 +314,7 @@ object WalStore {
         batch.foreach { b => b.failure = t; b.state = 2 }
         return batch
       }
-      uninterruptibly {
+      uninterruptibly { parked =>
         val starts = batch.map(_.buf.position())
         val preEnd = endPos
         val preCount = count
@@ -344,7 +350,7 @@ object WalStore {
             case t: Throwable =>
               lastFailure = t
               attempts += 1
-              Thread.interrupted() // clear: the close was interrupt-induced; status re-asserted by uninterruptibly
+              parked.clear() // the close was interrupt-induced; re-asserted on exit
           }
         }
         if (!committed) {
@@ -360,7 +366,7 @@ object WalStore {
       * and an asynchronously-closed channel healed (one reopen+retry);
       * `whenClosed` answers after a DELIBERATE [[close]] — teardown
       * races resolve to the post-teardown view instead of throwing. */
-    private def channelOp[A](whenClosed: => A)(body: => A): A = locked(uninterruptibly {
+    private def channelOp[A](whenClosed: => A)(body: => A): A = locked(uninterruptibly { parked =>
       if (closedForever) whenClosed
       else {
         var attempts = 0
@@ -373,7 +379,7 @@ object WalStore {
             case e: java.nio.channels.ClosedChannelException =>
               if (closedForever || attempts >= 2) throw e
               attempts += 1
-              Thread.interrupted() // interrupt-induced close; re-asserted by uninterruptibly
+              parked.clear() // interrupt-induced close; re-asserted on exit
           }
         }
         out
@@ -426,6 +432,13 @@ object WalStore {
     private[graft] def simulateAsyncClose(): Unit = locked {
       try channel.close() catch { case _: java.io.IOException => () }
     }
+  }
+
+  /** The interrupt status one [[TableWal]] channel op has cleared so
+    * far, re-asserted when the op ends. */
+  private final class ParkedInterrupt {
+    var seen = false
+    def clear(): Unit = if (Thread.interrupted()) seen = true
   }
 
   private val writers =
@@ -526,17 +539,11 @@ object WalStore {
     out.toByteArray
   }
 
-  /** Append pre-framed records ([[frame]]) — one channel write under
-    * the writer's monitor, a call's rows contiguous. */
-  def appendFrames[T](root: String, tbl: String, enc: Encoder[T],
-      frames: Array[Byte], n: Int, force: Boolean): Unit =
-    forTable(root, tbl, enc).appendFramed(ByteBuffer.wrap(frames), n, force)
-
   /** Frame-and-append convenience for callers with no lock discipline
     * of their own. */
   def append[T](root: String, tbl: String, enc: Encoder[T], rows: Seq[T],
       force: Boolean): Unit =
-    appendFrames(root, tbl, enc, frame(enc, rows), rows.size, force)
+    forTable(root, tbl, enc).appendFramed(ByteBuffer.wrap(frame(enc, rows)), rows.size, force)
 
   /** Decode all live rows of one table (empty if no WAL). */
   def rows[T](root: String, tbl: String, enc: Encoder[T]): Seq[T] = {

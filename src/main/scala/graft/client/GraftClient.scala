@@ -88,9 +88,9 @@ class GraftClient(
     validateQueue(queue)
     validateRetryOpts(retry)
     require(fnSym.nonEmpty, "execute-fn-sym required")
-    require(ArgsSerializers.active.roundTripConsistent(args),
-      "args must serialize consistently (reference specs.clj:161-168)")
-    Job(fnSym, args, queue, retry).copy(enqueuedAt = nowFn())
+    val argsJson = ArgsSerializers.active.consistentEncoding(args)
+    require(argsJson.isDefined, "args must serialize consistently (reference specs.clj:161-168)")
+    Job.encoded(fnSym, argsJson.get, queue, retry, enqueuedAt = nowFn())
   }
 
   /** Fire-and-forget enqueue (reference client.clj:60-80, S1). */

@@ -13,9 +13,15 @@ trait ArgsSerializer extends Serializable {
   def encode(args: Seq[Any]): String
   def decode(payload: String): Seq[Any]
 
-  /** The round-trip-consistency guard (reference specs.clj:161-168). */
-  def roundTripConsistent(args: Seq[Any]): Boolean =
-    encode(args) == encode(decode(encode(args)))
+  /** The round-trip-consistency guard (reference specs.clj:161-168):
+    * the encoding of `args` if it survives a decode and re-encode
+    * unchanged, else None. */
+  def consistentEncoding(args: Seq[Any]): Option[String] = {
+    val once = encode(args)
+    if (once == encode(decode(once))) Some(once) else None
+  }
+
+  def roundTripConsistent(args: Seq[Any]): Boolean = consistentEncoding(args).isDefined
 }
 
 /** Default codec: the hand-rolled JSON in [[ArgsCodec]]. */

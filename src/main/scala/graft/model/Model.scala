@@ -64,14 +64,20 @@ final case class Job(
 
 object Job {
   def apply(fnSym: String, args: Seq[Any], queue: String, retryOpts: RetryOpts): Job =
+    encoded(fnSym, ArgsSerializers.active.encode(args), queue, retryOpts,
+      System.currentTimeMillis())
+
+  /** A fresh job over args the caller has already encoded. */
+  def encoded(fnSym: String, argsJson: String, queue: String, retryOpts: RetryOpts,
+      enqueuedAt: Long): Job =
     Job(
       id = UUID.randomUUID().toString,
       executeFnSym = fnSym,
-      argsJson = ArgsSerializers.active.encode(args),
+      argsJson = argsJson,
       queue = queue,
       readyQueue = queue,
       priority = 0,
-      enqueuedAt = System.currentTimeMillis(),
+      enqueuedAt = enqueuedAt,
       scheduleRunAt = None,
       cronRunAt = None,
       batchId = None,

@@ -550,8 +550,7 @@ object WorkerEngine {
   val SmallCommitRows: Long = 2048L
 
   private[worker] def smallCommitRows(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.worker.smallCommitRows")
-      .map(_.toLong).getOrElse(SmallCommitRows)
+    spark.conf.get("graft.worker.smallCommitRows", SmallCommitRows.toString).toLong
 
   /** Bound on shard-contention retry rounds inside one claimed pass.
     * Contention resolves by membership convergence (a refresh per few

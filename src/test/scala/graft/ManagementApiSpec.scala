@@ -216,4 +216,21 @@ class ManagementApiSpec extends SparkSpec {
     val twice = api.importSnapshot(dir, dst)
     assert(twice("cron") == 1L && twice("batches") == 1L && twice("ready") == 1L)
   }
+
+  test("a failed snapshot import leaves no pool thread running its siblings") {
+    val (backend, client, _, _, api, _) = fixture()
+    (1 to 20).foreach(i => client.performAsync("ok", i))
+    client.performEveryTz("snap-cron", "0 * * * *", "UTC", "ok")
+    val dir = tmpDir("graft-snap-fail") + "/s"
+    api.exportSnapshot(dir)
+    graft.Scratch.delete(s"$dir/ready") // the first collection fails at once
+    val dst = new ParquetBackend(spark, tmpDir("graft-snap-fail-dst"))
+    intercept[Exception](api.importSnapshot(dir, dst))
+    import scala.jdk.CollectionConverters._
+    val running = Thread.getAllStackTraces.asScala.collect {
+      case (t, frames) if t.isAlive && (t ne Thread.currentThread()) &&
+          frames.exists(_.getClassName.startsWith(classOf[ManagementApi].getName)) => t.getName
+    }
+    assert(running.isEmpty, s"snapshot steps still running after the failure: $running")
+  }
 }

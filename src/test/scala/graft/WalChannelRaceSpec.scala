@@ -88,6 +88,61 @@ class WalChannelRaceSpec extends AnyFunSuite {
     } finally Scratch.delete(root)
   }
 
+  /** Interrupt a thread looping `op` until its interrupt status is set,
+    * over rounds, and count the rounds whose interrupt landed inside a
+    * channel op: those close the channel, so the heal's reopen bumps the
+    * WAL's truncation generation. Every round's thread must see its
+    * interrupt and leave the loop. */
+  private def interruptMidOp(root: String, rounds: Int)(op: () => Unit): Int = {
+    val wal = WalStore.forTable(root, "t", Enc)
+    var midOp = 0
+    for (r <- 0 until rounds) {
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val ops = new java.util.concurrent.atomic.AtomicLong(0)
+      val sawInterrupt = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val t = new Thread(() => {
+        while (!Thread.currentThread().isInterrupted && !stop.get()) {
+          op(); ops.incrementAndGet()
+        }
+        sawInterrupt.set(Thread.currentThread().isInterrupted)
+      })
+      val gen0 = wal.mark._1
+      t.start()
+      while (ops.get() == 0 && t.isAlive) Thread.sleep(1)
+      Thread.sleep(r % 3)
+      t.interrupt()
+      t.join(5000)
+      val exitedOnInterrupt = !t.isAlive && sawInterrupt.get()
+      stop.set(true)
+      t.join(10000)
+      if (wal.mark._1 != gen0) midOp += 1
+      assert(exitedOnInterrupt,
+        s"round $r: the interrupt was swallowed (still looping after 5 s)")
+    }
+    midOp
+  }
+
+  test("an interrupt landing mid-I/O is re-asserted after the heal-retry") {
+    val root = freshRoot()
+    try {
+      // enough records that one readAll spends milliseconds in channel reads
+      (0 until 16).foreach(b => append(root, (0 until 500).map(i => ((b * 500 + i).toLong, "r")): _*))
+      val reads = interruptMidOp(root, 8)(() => { WalStore.forTable(root, "t", Enc).readAll(); () })
+      assert(reads > 0, "no interrupt landed inside a read")
+      assert(liveRows(root).size == 8000, "the heal must not lose or double records")
+
+      WalStore.forTable(root, "t", Enc).truncate()
+      var i = 0L
+      var appends = 0
+      var rounds = 0
+      while (appends < 3 && rounds < 200) { // an append's write is a short window
+        appends += interruptMidOp(root, 1) { () => append(root, (i, "a")); i += 1 }
+        rounds += 1
+      }
+      assert(appends > 0, "no interrupt landed inside an append's write")
+    } finally Scratch.delete(root)
+  }
+
   test("interrupt hammer: producers interrupted mid-append never brick the WAL") {
     val root = freshRoot()
     try {
