@@ -453,17 +453,16 @@ object Bench {
     * BASELINE.md, perf/goose/redis/load.clj:57-62):
     *
     *  - sync: N sequential [[graft.client.GraftClient.performAsync]]
-    *    calls, each a visible-and-durable one-row append through the
-    *    direct-parquet latency path ([[graft.backend.DirectParquetAppend]]),
-    *    published so the per-call cost is measured, not guessed.
+    *    calls, each a visible-and-durable one-row append to the ready
+    *    WAL ([[graft.backend.WalStore]]), published so the per-call cost
+    *    is measured, not guessed.
     *  - buffered: N calls through [[graft.client.BufferingClient]]
     *    (group commit, RMQ async-confirm semantics) + final flush.
     *
     * Returns (syncJobsPerSec, bufferedJobsPerSec). */
   /** nSync sized for the r9 WAL-ready lane (~0.5 ms/call): 128 calls
     * finished in ~60 ms, inside timer/JIT noise; 1024 gives a ~0.5 s
-    * window at the current rate and still ~5 s if the file lane
-    * (graft.ready.percall=file) is ever benched. */
+    * window at the current rate. */
   /** Measures STEADY-STATE enqueue throughput — the rate a deployment
     * doing millions of enqueues actually sees — not a JIT transient.
     * The r11 diagnosis: on one idle-host JVM, back-to-back calls of the

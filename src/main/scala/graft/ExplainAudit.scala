@@ -115,9 +115,11 @@ object ExplainAudit {
       "q44_unpivot" -> (Seq("Expand"), Seq("CartesianProduct")),
       // r16: the per-doc top-1 is a grouped min(struct) — the old
       // Window/WindowGroupLimit form shuffled every (doc, tok) row into
-      // a sort; the agg form partial-aggregates map-side. A Window here
+      // a sort; the agg form partial-aggregates map-side. A min over a
+      // struct plans as SortAggregate (t07's other aggregates are
+      // HashAggregate, so that fragment proves nothing). A Window here
       // would be the regression.
-      "t07_tfidf" -> (Seq("HashAggregate"), Seq("Window", "CartesianProduct")),
+      "t07_tfidf" -> (Seq("SortAggregate"), Seq("Window", "CartesianProduct")),
       // t08/d14 attach a 1-row broadcast scalar (corpus N / the batch
       // boundary) — that BNLJ is the intended scalar-attach plan, so only
       // a true product join is forbidden

@@ -20,32 +20,6 @@ object QuickProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach {
-      // pseudo-query: per-stage split of the direct-append latency path,
-      // A/B'd across parquet codecs (the writer-build stage includes
-      // compressor allocation; codec() reads the session conf)
-      case "__enqueue_profile" =>
-        Seq("snappy", "uncompressed").foreach { codecName =>
-          spark.conf.set("spark.sql.parquet.compression.codec", codecName)
-          graft.Scratch.withDir("probe-enqprof") { root =>
-            graft.model.JobRegistry.register("bench_noop", _ => "ok")
-            val client = new graft.client.GraftClient(
-              new graft.backend.ParquetBackend(spark, root), spark, "bench")
-            (1 to 16).foreach(i => client.performAsync("bench_noop", -i)) // warm
-            val timer = new graft.backend.DirectParquetAppend.StageTimer
-            graft.backend.DirectParquetAppend.profiler.set(timer)
-            val n = 128
-            val t0 = System.nanoTime()
-            (1 to n).foreach(i => client.performAsync("bench_noop", i))
-            val total = (System.nanoTime() - t0) / 1e6
-            graft.backend.DirectParquetAppend.profiler.remove()
-            val staged = timer.stages.map { case (k, v) => f"$k=${v / n}%.2fms" }
-            val inAppend = timer.stages.values.sum
-            println(f"PROBE enqueue_profile codec=$codecName n=$n total=${total / n}%.2fms/call " +
-              f"append=${inAppend / n}%.2fms ${staged.mkString(" ")} " +
-              f"outside_append=${(total - inAppend) / n}%.2fms")
-          }
-          spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
-        }
       // pseudo-query: console page render latency against a 1M-row
       // backend (r7 verdict stretch #9) — each page is a driver-side
       // Spark action whose pagination must stay limit-pushed; p50 over

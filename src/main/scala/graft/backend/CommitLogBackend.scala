@@ -896,9 +896,9 @@ final class CommitLogBackend(
     * durable before the release is observable) upgrades from
     * "sequenced" to "atomic": a foreign claimant that sees the release
     * sees the completions in the same snapshot. */
-  override def recordCompletionRowsReleasing(events: Seq[graft.model.CompletionEvent],
+  override def recordCompletionRows(events: Seq[graft.model.CompletionEvent],
       release: Option[(String, Long)]): Unit = release match {
-    case None => recordCompletionRows(events)
+    case None => super.recordCompletionRows(events, None)
     case Some((cid, at)) =>
       val recs = Seq.newBuilder[String]
       if (events.nonEmpty) {

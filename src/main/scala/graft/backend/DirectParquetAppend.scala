@@ -177,29 +177,11 @@ object DirectParquetAppend {
       ()
     }
 
-  /** Opt-in per-stage wall accounting for the latency path (VERDICT r7
-    * #7: profile the ~15 ms/call split instead of guessing). Null when
-    * off — each stage mark is one null check. Accumulates millis per
-    * stage across calls on the installing thread. */
-  final class StageTimer {
-    val stages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    private var last = System.nanoTime()
-    def reset(): Unit = last = System.nanoTime()
-    def mark(name: String): Unit = {
-      val now = System.nanoTime()
-      stages(name) = stages.getOrElse(name, 0.0) + (now - last) / 1e6
-      last = now
-    }
-  }
-  val profiler = new ThreadLocal[StageTimer]()
-
   /** [[append]] with a caller-chosen final file name — for manifest
     * backends that must know the name to commit an add-record for it. */
   def appendAs[T](spark: SparkSession, enc: Encoder[T], dir: String,
       fileName: String, rows: Seq[T]): Unit = {
     if (rows.isEmpty) return
-    val prof = profiler.get()
-    if (prof != null) prof.reset()
     val (toRowAny, schema) = serializerCache.computeIfAbsent(enc, { e =>
       val ee = exprEncoder(e)
       (ee.createSerializer(), ee.schema)
@@ -212,7 +194,6 @@ object DirectParquetAppend {
     val stagingDir = new Path(new Path(dir).getParent, ".staging")
     val staged = new Path(stagingDir, fileName)
     ensureDir(fs, stagingDir)
-    if (prof != null) prof.mark("resolve")
 
     // Build→write→close under the serializer monitor: the serializer's
     // row buffer AND the shared write support's per-file recordConsumer
@@ -227,11 +208,9 @@ object DirectParquetAppend {
         .withPageSize(16 << 10)
         .withDictionaryPageSize(16 << 10)
         .build()
-      if (prof != null) prof.mark("writer_build")
       try rows.foreach(r => writer.write(toRow(r)))
       finally writer.close()
     }
-    if (prof != null) prof.mark("write_close")
 
     val target = new Path(dir)
     ensureDir(fs, target)
@@ -244,7 +223,6 @@ object DirectParquetAppend {
       if (!fs.rename(staged, dst))
         throw new java.io.IOException(s"rename $staged -> $dst failed")
     }
-    if (prof != null) prof.mark("rename")
   }
 
   /** Newest modification time anywhere under `p` (dirs and files): the

@@ -60,12 +60,15 @@ final class InMemoryBackend(spark: SparkSession) extends QueueBackend {
   override def buryRows(jobs: Seq[Job]): Unit =
     lock.synchronized { dead ++= jobs }
   override def recordCompletions(events: Dataset[CompletionEvent]): Unit =
-    recordCompletionRows(events.collect().toSeq)
-  override def recordCompletionRows(events: Seq[CompletionEvent]): Unit =
+    recordCompletionRows(events.collect().toSeq, None)
+  override def recordCompletionRows(events: Seq[CompletionEvent],
+      release: Option[(String, Long)]): Unit = {
     lock.synchronized {
       comps ++= events
       consumedKeys ++= events.map(e => (e.jobId, e.attempt))
     }
+    release.foreach { case (cid, at) => releaseShardClaim(cid, at) }
+  }
 
   /** Driver-local state: the probe is an exact buffer check. */
   override def maybeNonEmpty(tbl: String): Boolean = lock.synchronized {

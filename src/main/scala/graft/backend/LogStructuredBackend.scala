@@ -93,8 +93,11 @@ abstract class LogStructuredBackend(val spark: SparkSession) extends QueueBacken
   override def buryRows(jobs: Seq[Job]): Unit = appendSmallRows("dead", jobs)
   override def recordCompletions(events: Dataset[CompletionEvent]): Unit =
     appendLog("completions", events)
-  override def recordCompletionRows(events: Seq[CompletionEvent]): Unit =
+  override def recordCompletionRows(events: Seq[CompletionEvent],
+      release: Option[(String, Long)]): Unit = {
     appendSmallRows("completions", events)
+    release.foreach { case (cid, at) => releaseShardClaim(cid, at) }
+  }
 
   /** Table provably empty ⇔ no data files and no latency-path tail.
     * Data files via the binding's own metadata (directory listing /

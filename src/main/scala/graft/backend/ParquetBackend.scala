@@ -280,13 +280,8 @@ class ParquetBackend(spark0: SparkSession, val root: String)
       // (its consumer BLMOVE-polls at 1 s, redis/consumer.clj:12-21).
       // MULTI-row appends keep the one-file path: performBatch's atomic
       // N+1 contract rides single-file visibility, and bulk appends are
-      // already amortized. `graft.ready.percall=file` restores the
-      // file-token behavior per session.
-      // Knobs are read with a default, never `getOption`: Spark's
-      // getOption builds and catches an exception (error-class message
-      // plus stack trace) for every unset key, twice per call here.
-      val walReady = tbl == "ready" && rows.size == 1 &&
-        spark.conf.get("graft.ready.percall", "wal") != "file"
+      // already amortized.
+      val walReady = tbl == "ready" && rows.size == 1
       if (StreamedTables(tbl) && !walReady) {
         // FIFO vs the WAL lane (ADVICE r9): an earlier per-call enqueue
         // may still be WAL-resident (stream-visible only at the next
@@ -320,6 +315,8 @@ class ParquetBackend(spark0: SparkSession, val root: String)
         // overshootable by the number of in-flight producers, and the
         // next append drains.
         val frames = java.nio.ByteBuffer.wrap(WalStore.frame(enc, rows))
+        // read with a default, never `getOption`: Spark's getOption
+        // builds and catches an exception for every unset key
         val fsync = spark.conf.get("graft.wal.fsync", "false") == "true"
         // one writer lookup per append: a fold truncates this same
         // writer, so its size stays the live record count

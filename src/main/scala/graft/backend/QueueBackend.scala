@@ -117,22 +117,16 @@ trait QueueBackend {
     * completion batch commits through the binding's cheap atomic append
     * (WAL / direct file) instead of a distributed write job. The commit
     * POINT semantics are identical: rows are visible and durable on
-    * return. */
-  def recordCompletionRows(events: Seq[CompletionEvent]): Unit
-
-  /** [[recordCompletionRows]] + [[releaseShardClaim]] folded into ONE
-    * logical commit where the binding can make it atomic (VERDICT r15
-    * #3: a claimed micro-batch paid a completions commit AND a release
-    * commit — the release can ride the completions commit's manifest
-    * record). The pass-ordering contract — completions durable before
-    * the release is observable — holds trivially when both land in one
-    * atomic commit, and by sequence in this default. `release` =
-    * (claimantId, at), None for unclaimed passes. */
-  def recordCompletionRowsReleasing(events: Seq[CompletionEvent],
-      release: Option[(String, Long)]): Unit = {
-    recordCompletionRows(events)
-    release.foreach { case (cid, at) => releaseShardClaim(cid, at) }
-  }
+    * return.
+    *
+    * `release` = (claimantId, at) for a claimed pass, None otherwise:
+    * the pass's [[releaseShardClaim]] rides this commit, atomically
+    * where the binding can (VERDICT r15 #3: a claimed micro-batch paid
+    * a completions commit AND a release commit). The pass-ordering
+    * contract — completions durable before the release is observable —
+    * holds trivially in one atomic commit, and by sequence otherwise. */
+  def recordCompletionRows(events: Seq[CompletionEvent],
+      release: Option[(String, Long)]): Unit
 
   /** Cheap, CONSERVATIVE emptiness probe for one logical table: `false`
     * only when the table provably holds no rows (no data files, no

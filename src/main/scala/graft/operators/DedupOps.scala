@@ -817,10 +817,12 @@ object DedupOps {
               coalesce(expr("try_element_at(cuts, -1)"), lit(0)),
             concat(col("cuts"), array(length(col("text")))))
             .otherwise(col("cuts")))
+        // a doc shorter than one shingle can still cut at 8 (its lone
+        // shingle is the whole text): clamp the booked length to the text
         .select(col("source"), explode(expr(
           "zip_with(concat(array(0), slice(allcuts, 1, greatest(size(allcuts) - 1, 0)))," +
             " allcuts, (p, c) -> struct(md5(substring(text, p + 1, c - p)) AS h," +
-            " (c - p) AS len))")).as("ck"))
+            " (least(c, length(text)) - p) AS len))")).as("ck"))
         // a zero-length text has NO cuts and no tail (the old `cut > prev`
         // filter dropped it); its zip_with pads prevs=[0] against [] with
         // a null cut — drop that null pair instead of emitting a null h

@@ -443,8 +443,9 @@ object EngineE2E {
         }
         // the worker's small-commit lane lands bounded passes here — the
         // injected death must cover both commit paths
-        override def recordCompletionRows(events: Seq[CompletionEvent]): Unit = {
-          maybeDie(); super.recordCompletionRows(events)
+        override def recordCompletionRows(events: Seq[CompletionEvent],
+            release: Option[(String, Long)]): Unit = {
+          maybeDie(); super.recordCompletionRows(events, release)
         }
       }
       val execCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()

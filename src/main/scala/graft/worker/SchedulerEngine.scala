@@ -72,7 +72,7 @@ final class SchedulerEngine(
         j.copy(queue = j.readyOrRetryQueue, readyQueue = j.readyOrRetryQueue,
           priority = clampedPriority(j.readyOrRetryQueue), enqueuedAt = now,
           seq = Job.nextSeq())
-      if (n <= graft.worker.WorkerEngine.smallCommitRows(spark)) {
+      if (n <= WorkerEngine.SmallCommitRows) {
         // SMALL-COMMIT LANE (r15, the executeBatchInner discipline): the
         // observed due count bounds the promotion, so both commits ride
         // the backend's atomic driver append instead of two distributed
@@ -94,15 +94,6 @@ final class SchedulerEngine(
     } finally due.unpersist()
   }
 
-  /** Materialize every due cron entry into a job and advance its
-    * next-run time (reference redis/cron.clj:57-103). The registry is a
-    * small keyed table (goose keeps it in one Redis HASH), so the
-    * driver-side collect here is bounded by the number of *schedules*,
-    * never by job volume — and that bound is ENFORCED: more than
-    * `maxCronEntries` due schedules fails loudly (like
-    * [[graft.operators.DedupOps]]'s connected-components round cap)
-    * rather than silently ballooning the driver heap. Job *volume* from
-    * cron fires is unbounded; only the schedule registry is capped. */
   /** Cron read-skipping gate: (registry fingerprint, earliest
     * nextRunAt). While the backend reports the SAME table fingerprint
     * (metadata-only identity — any upsert/delete/fold/cross-process
@@ -113,6 +104,16 @@ final class SchedulerEngine(
     * re-ran the latest-wins window + collect. */
   private var cronGate: Option[(Long, Long)] = None
 
+  /** Materialize every due cron entry into a job and advance its
+    * next-run time (reference redis/cron.clj:57-103). The registry is a
+    * small keyed table (goose keeps it in one Redis HASH), so the
+    * driver-side collect here is bounded by the number of *schedules*,
+    * never by job volume — and that bound is ENFORCED on the WHOLE
+    * registry: a call that reads more than `maxCronEntries` entries,
+    * due or not, throws `IllegalStateException` (like
+    * [[graft.operators.DedupOps]]'s connected-components round cap)
+    * rather than silently ballooning the driver heap. The registry
+    * bound is also what keeps each tick's fire set driver-sized. */
   def fireCron(): Int = synchronized {
     // Empty registry ⇒ nothing due, no Spark job (see promoteDue note).
     if (!backend.maybeNonEmpty("cron")) return 0
@@ -161,14 +162,11 @@ final class SchedulerEngine(
             s"cron:${e.cronName}@${e.nextRunAt}".getBytes("UTF-8")).toString,
           priority = 1, enqueuedAt = now)
     }
-    // SMALL-COMMIT LANE (the promoteDue discipline): the fire set is
-    // already a bounded driver-side array, so a small one rides the
-    // backend's atomic multi-row append (stream-visible file token)
-    // instead of a distributed write job. Same commit order (enqueue,
-    // then the registry advance) as before.
-    if (jobs.length <= graft.worker.WorkerEngine.smallCommitRows(spark))
-      backend.enqueueRows(jobs.toIndexedSeq)
-    else backend.enqueue(spark.createDataset(jobs.toIndexedSeq).coalesce(1))
+    // The fire set is a driver-side array bounded by the registry cap,
+    // so it rides the backend's atomic driver append (one file for a
+    // multi-row set) instead of a distributed write job. Commit order:
+    // enqueue, then the registry advance.
+    backend.enqueueRows(jobs.toIndexedSeq)
     val advanced = due.map { e =>
       val sched = CronSchedule.parse(e.cronSchedule)
       val next = sched.nextFire(Instant.ofEpochMilli(now), ZoneId.of(e.timezone)).toEpochMilli

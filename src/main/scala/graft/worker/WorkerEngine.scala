@@ -276,6 +276,9 @@ final class WorkerEngine(
             // on failure — the identity rotation orphans the failed
             // pass's claims and the lease expires them (goose's
             // dead-consumer window).
+            // one release per claim: the previous pass consumed its token
+            assert(pendingRelease.get() == null,
+              s"shard release still pending for $claimantId")
             pendingRelease.set(claimantId)
             val stats =
               try WorkerEngine.claimStage("body")(body(won))
@@ -398,7 +401,7 @@ final class WorkerEngine(
       // attempt) dedupe in filterReadyVisible / the (id, seq) tombstones.
       // The REVERSE order would mark the attempt consumed with its retry
       // never scheduled — silent job loss.
-      if (executed <= WorkerEngine.smallCommitRows(spark)) {
+      if (executed <= WorkerEngine.SmallCommitRows) {
         // SMALL-COMMIT LANE: the pass's outcome set is bounded (the
         // observed count proves it before anything is moved), so the
         // three outcome commits ride the backend's cheap atomic append
@@ -423,7 +426,7 @@ final class WorkerEngine(
           // atomic manifest commit instead of two — see withClaims)
           val rel = Option(pendingRelease.get())
           pendingRelease.set(null)
-          backend.recordCompletionRowsReleasing(
+          backend.recordCompletionRows(
             rows.iterator.map(WorkerCore.toCompletion).toIndexedSeq,
             rel.map(cid => (cid, nowFn())))
         }
@@ -545,12 +548,8 @@ object WorkerEngine {
     * instead of Spark write jobs — the bound is on DATA VOLUME (rows
     * collected to the driver, ~1 KB each), so it is scale-adaptive,
     * not core-count-tuned: big micro-batches take the distributed lane
-    * regardless of deployment size. Override per session via
-    * `graft.worker.smallCommitRows` (0 disables the lane). */
+    * regardless of deployment size. */
   val SmallCommitRows: Long = 2048L
-
-  private[worker] def smallCommitRows(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get("graft.worker.smallCommitRows", SmallCommitRows.toString).toLong
 
   /** Bound on shard-contention retry rounds inside one claimed pass.
     * Contention resolves by membership convergence (a refresh per few

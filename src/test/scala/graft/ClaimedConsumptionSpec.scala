@@ -281,4 +281,26 @@ class ClaimedConsumptionSpec extends SparkSpec {
     val e2 = new WorkerEngine(b, spark, queue = Some("shared"), claimedConsumption = true)
     assert(e2.runPass().executed == 0) // drained; no ShardContended throw
   }
+
+  test("each claimed pass releases its shard claim exactly once") {
+    JobRegistry.register("claim_count", _ => "ok")
+    JobRegistry.register("claim_boom", _ => throw new RuntimeException("boom"))
+    val b = new CommitLogBackend(spark, tmpDir("graft-claims"))
+    val e = new WorkerEngine(b, spark, queue = Some("shared"), claimedConsumption = true)
+    b.enqueue(Seq(job(1), job(2)).toDS().coalesce(1))
+    assert(e.runPass().executed == 2) // release rides the completion commit
+    assert(e.runPass().executed == 0) // nothing to commit: standalone release
+    b.enqueue(Seq(job(3).copy(executeFnSym = "claim_boom")).toDS().coalesce(1))
+    assert(e.runPass().retried == 1) // retry + completion in one pass
+    // every shard row in commit order (its jobId leads with the seq): a
+    // release-carrying completion commit and a standalone
+    // releaseShardClaim each land exactly one release row
+    val trail = b.readClaims().collect()
+      .filter(_.attempt == CommitLogBackend.ShardClaimAttempt)
+      .map(_.jobId).sorted.toSeq
+      .map(id => if (CommitLogBackend.parseShardClaim(id).exists(_._2 == 0)) "release"
+        else "claim")
+    assert(trail == Seq.fill(3)(Seq("claim", "release")).flatten,
+      s"every claim must be released exactly once: ${trail.mkString(",")}")
+  }
 }

@@ -453,6 +453,21 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
+  test("d22 CDC: a doc shorter than one shingle books its own length") {
+    // "short86" is 7 chars; its lone shingle (the whole text) clears the
+    // boundary rule (md5 prefix "03" < "04"), so its only cut lands at 8,
+    // past the end of the text
+    val dir = tmpDir("d22-short")
+    import spark.implicits._
+    Seq((1L, "short86", "en", "s_short", 7L), (2L, "abc", "en", "s_tiny", 3L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val rows = operators.DedupOps.queries("d22_cdc_chunks")(spark, dir).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(4))).toMap
+    assert(rows("s_short") == ((1L, 7L)), "one chunk, booked at the text's length")
+    assert(rows("s_tiny") == ((1L, 3L)), "a cut-free short doc is its own tail chunk")
+  }
+
   test("t16 token drift: bounded L1, token census conserved") {
     val rows = operators.TextOps.queries("t16_token_drift")(spark, sf).collect()
     assert(rows.nonEmpty)

@@ -29,8 +29,9 @@ final class CrashingBackend(inner: QueueBackend, failMethod: String)
   def recordCompletions(events: Dataset[CompletionEvent]): Unit = {
     maybeFail("recordCompletions"); inner.recordCompletions(events)
   }
-  def recordCompletionRows(events: Seq[CompletionEvent]): Unit = {
-    maybeFail("recordCompletions"); inner.recordCompletionRows(events)
+  override def recordCompletionRows(events: Seq[CompletionEvent],
+      release: Option[(String, Long)]): Unit = {
+    maybeFail("recordCompletions"); inner.recordCompletionRows(events, release)
   }
   override def maybeNonEmpty(tbl: String): Boolean = inner.maybeNonEmpty(tbl)
   def tombstone(tbl: String, victims: Seq[(String, Long)], reason: String): Unit = {

@@ -53,11 +53,10 @@ class DirectAppendSpec extends SparkSpec {
     val percall = (51 to 60).map(job(_))
 
     backend.enqueue(bulk.toDS().repartition(4)) // distributed path
-    // the FILE lane's mixed-read contract is what's under test → pin it
-    // (the r9 default routes single-row ready appends to the WAL)
-    spark.conf.set("graft.ready.percall", "file")
-    try percall.foreach(j => backend.enqueueRows(Seq(j))) // per-call path
-    finally spark.conf.unset("graft.ready.percall")
+    // the FILE lane's mixed-read contract is what's under test: a
+    // multi-row enqueueRows lands one direct file (a single-row one
+    // rides the ready WAL)
+    percall.grouped(2).foreach(backend.enqueueRows)
 
     val got = backend.readyJobs.collect().map(_.id).toSet
     assert(got == (1 to 60).map(i => s"j$i").toSet)
@@ -132,21 +131,18 @@ class DirectAppendSpec extends SparkSpec {
   test("append recovers when a cached table dir was deleted out from under it") {
     val root = tmpDir("graft-direct")
     val backend = new ParquetBackend(spark, root)
-    spark.conf.set("graft.ready.percall", "file") // dir-cache retry is a file-lane path
-    backend.enqueueRows(Seq(job(1))) // populates the dir cache
+    // dir-cache retry is a file-lane path: multi-row appends take it
+    backend.enqueueRows(Seq(job(1), job(3))) // populates the dir cache
     // external teardown: the whole table dir vanishes
     graft.Scratch.delete(s"$root/ready")
-    backend.enqueueRows(Seq(job(2))) // cache is stale → retry path
-    spark.conf.unset("graft.ready.percall")
-    assert(backend.readyJobs.collect().map(_.id).toSet == Set("j2"))
+    backend.enqueueRows(Seq(job(2), job(4))) // cache is stale → retry path
+    assert(backend.readyJobs.collect().map(_.id).toSet == Set("j2", "j4"))
   }
 
   test("sweepStaging reclaims stale crash leftovers, keeps young files") {
     val root = tmpDir("graft-direct")
     val backend = new ParquetBackend(spark, root)
-    spark.conf.set("graft.ready.percall", "file")
-    try backend.enqueueRows(Seq(job(1))) // creates .staging
-    finally spark.conf.unset("graft.ready.percall")
+    backend.enqueueRows(Seq(job(1), job(2))) // direct file: creates .staging
 
     val stale = new java.io.File(s"$root/.staging/part-stale.parquet")
     val young = new java.io.File(s"$root/.staging/part-young.parquet")
@@ -156,6 +152,6 @@ class DirectAppendSpec extends SparkSpec {
     assert(backend.sweepStaging(olderThanMs = 600000) == 1)
     assert(!stale.exists() && young.exists())
     // visible data untouched
-    assert(backend.readyJobs.count() == 1)
+    assert(backend.readyJobs.count() == 2)
   }
 }

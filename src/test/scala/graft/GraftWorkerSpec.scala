@@ -93,13 +93,14 @@ class GraftWorkerSpec extends SparkSpec {
     val api = new ManagementApi(backend, spark)
 
     // one file per append: this test exercises compaction UNDER a
-    // many-small-files load, so pin the per-call file lane (the r9
-    // default rides the ready WAL and would produce zero files here)
-    spark.conf.set("graft.ready.percall", "file")
-    try {
-      (1 to 20).foreach(i => client.performAsync("ok", s"a$i"))
-      (1 to 4).foreach(_ => client.performAsync("boom"))
-    } finally spark.conf.unset("graft.ready.percall")
+    // many-small-files load, so fold the ready WAL after each call (a
+    // per-call enqueue rides the WAL and would produce zero files here)
+    def enqueueAsFile(fn: String, args: Any*): Unit = {
+      client.performAsync(fn, args: _*)
+      backend.drainLatencyPath()
+    }
+    (1 to 20).foreach(i => enqueueAsFile("ok", s"a$i"))
+    (1 to 4).foreach(_ => enqueueAsFile("boom"))
     client.performInSec(3600, "ok", "future") // stays scheduled, must survive
 
     def fileCount(): Int =

@@ -65,8 +65,9 @@ class ListenerSpec extends SparkSpec {
       override def recordCompletions(events: Dataset[CompletionEvent]): Unit = {
         maybeDie(); super.recordCompletions(events)
       }
-      override def recordCompletionRows(events: Seq[CompletionEvent]): Unit = {
-        maybeDie(); super.recordCompletionRows(events)
+      override def recordCompletionRows(events: Seq[CompletionEvent],
+          release: Option[(String, Long)]): Unit = {
+        maybeDie(); super.recordCompletionRows(events, release)
       }
     }
     val causes = new ConcurrentLinkedQueue[String]()

@@ -68,12 +68,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("prefetch bound: maxFilesPerTrigger caps each micro-batch, backlog drains (S8 QoS analog)") {
-    val (root, _, client, worker, _, _) = fixture()
-    // file-granularity intake is what's under test → pin the per-call
-    // file lane so each enqueue IS one log file
-    spark.conf.set("graft.ready.percall", "file")
-    try (1 to 4).foreach(i => client.performAsync("ok", s"j$i")) // 4 separate log files
-    finally spark.conf.unset("graft.ready.percall")
+    val (root, backend, client, worker, _, _) = fixture()
+    // file-granularity intake is what's under test → fold the ready WAL
+    // after each call so each enqueue IS one log file
+    (1 to 4).foreach { i =>
+      client.performAsync("ok", s"j$i")
+      backend.drainLatencyPath()
+    }
+    assert(backend.dataFileCount("ready") == 4)
     val q = worker.startStream(root, Trigger.ProcessingTime("50 milliseconds"),
       prefetchFiles = Some(1))
     try {

@@ -67,17 +67,6 @@ class WalStoreSpec extends SparkSpec {
     assert(backend.readyJobs.count() == 3)
   }
 
-  test("graft.ready.percall=file restores the per-call file token") {
-    val (root, backend) = freshBackend()
-    val client = clientOn(backend, () => T0)
-    spark.conf.set("graft.ready.percall", "file")
-    try {
-      client.performAsync("ok", 1)
-      assert(backend.dataFileCount("ready") == 1)
-      assert(WalStore.recordCount(root, "ready", JobEnc) == 0)
-    } finally spark.conf.unset("graft.ready.percall")
-  }
-
   test("ready WAL folds on the maintenance drain — the stream-visibility tick") {
     val (root, backend) = freshBackend()
     val client = clientOn(backend, () => T0)
